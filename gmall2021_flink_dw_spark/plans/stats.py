@@ -123,15 +123,19 @@ def dws_product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inserts no further exchange — measured 2.1x over the naive two-
     # shuffle form at sf0.1, and strictly half the shuffle IO at 100 TB.
     # (Partial map-side agg is useless here anyway: (day, sku, orderkey)
-    # is nearly unique per fact row.) Day-wide tumbling windows of a DATE
-    # column are the date itself, so the window struct reduces to
-    # l_shipdate with edt = date_add(1).
+    # is nearly unique per fact row.) The day-wide tumbling window of a
+    # timestamp is its date (the oracle's floor(epoch/86400) day; no tz
+    # involved: NTZ, or LTZ in the pinned UTC session), so the window
+    # struct reduces to to_date(l_shipdate) with edt = date_add(1).
+    # Grouping by the raw timestamp would split a day whose rows carry
+    # a time of day.
     # The part dim joins AFTER both phases: p_brand is functionally
     # dependent on l_partkey, so enriching the (day, sku) result rows
     # beats dragging the brand string through the fact-row shuffle.
     pre = (
-        li.repartition(F.col("l_shipdate"), F.col("l_partkey"))
-        .groupBy("l_shipdate", "l_partkey", "l_orderkey")
+        li.withColumn("_day", F.to_date("l_shipdate"))
+        .repartition(F.col("_day"), F.col("l_partkey"))
+        .groupBy("_day", "l_partkey", "l_orderkey")
         .agg(
             F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("_qty"),
             F.sum(
@@ -142,7 +146,7 @@ def dws_product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        pre.groupBy("l_shipdate", "l_partkey")
+        pre.groupBy("_day", "l_partkey")
         .agg(
             F.sum("_qty").cast("double").alias("sku_num"),
             F.sum("_amount").cast("double").alias("order_amount"),
@@ -151,10 +155,10 @@ def dws_product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(part), F.col("l_partkey") == part.p_partkey)
         .select(
-            F.date_format("l_shipdate", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-            F.date_format(
-                F.date_add("l_shipdate", 1), "yyyy-MM-dd HH:mm:ss"
-            ).alias("edt"),
+            F.date_format("_day", "yyyy-MM-dd HH:mm:ss").alias("stt"),
+            F.date_format(F.date_add("_day", 1), "yyyy-MM-dd HH:mm:ss").alias(
+                "edt"
+            ),
             "l_partkey",
             "p_brand",
             "sku_num",

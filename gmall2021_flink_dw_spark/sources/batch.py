@@ -6,13 +6,25 @@ the same logical tables from parquet. ``spark.read.parquet`` gives column
 pruning + predicate pushdown for free — the reference has neither (its
 Kafka source ships whole JSON strings per record).
 
+A table's schema is inferred once per file signature (real path, size,
+mtime and the parquet-inference confs): ``spark.read.parquet`` starts a
+one-task Spark job to read the footer on every call, so later reads of
+an unchanged file supply the cached schema and start no job. Structured
+Streaming fixes a file stream's schema at query start for the same
+reason; ``streaming/sources.py::stream_table`` shares the cache.
+
 At 100 TB these tables would be day-partitioned parquet/Delta on object
 storage; the loader API is path-based so that swap is a config change.
 """
 
 from __future__ import annotations
 
+import glob
+import math
 import os
+import warnings
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,20 +66,59 @@ def _ensure_session_confs(spark: SparkSession) -> None:
             pass
 
 
+# The confs (pinned by _ensure_session_confs) that change the schema
+# Spark infers from a parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# (realpath, st_size, st_mtime_ns, *inference conf values) -> StructType.
+# Only plain StructTypes are kept, never DataFrames: reusing one
+# DataFrame across queries risks self-join attribute clashes. A race
+# between two threads costs one extra inference, not a wrong schema.
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema of a plain
+    local file once per file signature; a rewritten file (new size or
+    mtime) or a changed inference conf is inferred again. URIs, globs
+    and directories are inferred on every call."""
+    if urlparse(path).scheme or glob.has_magic(path) or not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (os.path.realpath(path), st.st_size, st.st_mtime_ns) + tuple(
+        spark.conf.get(k, None) for k in _INFERENCE_CONFS
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    # Normalize events.ts to TIMESTAMP (LTZ; session tz is pinned UTC so
-    # values equal the tz-naive DuckDB reading) regardless of how the
-    # driver generated the parquet:
-    # - TIMESTAMP(NANOS): surfaced as long nanos under
-    #   spark.sql.legacy.parquet.nanosAsLong -> truncate to micros
-    #   (exactly what DuckDB does) with integer `div` (double division
-    #   would lose precision on ~1.7e18 nano values);
-    # - timestamp[us] without tz: surfaced as TIMESTAMP_NTZ under
-    #   inferTimestampNTZ -> cast to TIMESTAMP (interpreted in the UTC
-    #   session tz, value-identical), since watermarks/windows and the
-    #   epoch functions downstream expect the LTZ type.
+    return normalize_ts(read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet")))
+
+
+def normalize_ts(df: DataFrame) -> DataFrame:
+    """Normalize events.ts to TIMESTAMP (LTZ; session tz is pinned UTC so
+    values equal the tz-naive DuckDB reading) regardless of how the
+    parquet was written; batch and streaming reads share it:
+    - TIMESTAMP(NANOS): surfaced as long nanos under
+      spark.sql.legacy.parquet.nanosAsLong -> truncate to micros
+      (exactly what DuckDB does) with integer `div` (double division
+      would lose precision on ~1.7e18 nano values);
+    - timestamp[us] without tz: surfaced as TIMESTAMP_NTZ under
+      inferTimestampNTZ -> cast to TIMESTAMP (interpreted in the UTC
+      session tz, value-identical), since watermarks/windows and the
+      epoch functions downstream expect the LTZ type (withWatermark
+      rejects NTZ event-time columns).
+    Field names and order are preserved (withColumn on an existing
+    column)."""
     for f in df.schema.fields:
         if f.name == "ts" and isinstance(f.dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -92,6 +143,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 SPREAD_BYTES_PER_PART = 1 << 20
 
 
+def _env_number(var: str, raw: str, parse, valid):
+    """``parse(raw)`` for env knob ``var``; a ValueError naming the
+    variable when the value does not parse or fails ``valid``."""
+    try:
+        value = parse(raw)
+        if valid(value):
+            return value
+    except ValueError:
+        pass
+    raise ValueError(f"{var}={raw!r} is not a valid value")
+
+
 def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
     """Raise the parallelism of a tiny compute-heavy scan (guide §2.5
     "input skew": one unsplittable file -> repartition immediately
@@ -112,19 +175,29 @@ def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
     # (0 disables); SPARK_GRAFT_SPREAD_MB re-tunes bytes-per-partition.
     env = os.environ.get("SPARK_GRAFT_SPREAD_PARTS")
     if env is not None:
-        target = int(env)
+        target = _env_number("SPARK_GRAFT_SPREAD_PARTS", env, int, lambda v: v >= 0)
     else:
-        per_part = int(
-            float(os.environ.get("SPARK_GRAFT_SPREAD_MB", "1"))
-            * SPREAD_BYTES_PER_PART
+        mb = _env_number(
+            "SPARK_GRAFT_SPREAD_MB",
+            os.environ.get("SPARK_GRAFT_SPREAD_MB", "1"),
+            float,
+            lambda v: math.isfinite(v) and v > 0,
         )
-        try:
-            total = 0
-            for uri in df.inputFiles():
-                path = uri[7:] if uri.startswith("file:") else uri
+        per_part = max(1, int(mb * SPREAD_BYTES_PER_PART))
+        total = 0
+        for uri in df.inputFiles():
+            parsed = urlparse(uri)
+            path = url2pathname(parsed.path) if parsed.scheme == "file" else uri
+            try:
                 total += os.path.getsize(path)
-        except Exception:
-            return df
+            except OSError as e:
+                warnings.warn(
+                    f"spread_scan: cannot size input {path!r} ({e}); "
+                    "the scan is left unspread",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
+                return df
         target = min(sc.defaultParallelism * factor, total // per_part)
     if target <= 1:
         return df

@@ -110,3 +110,31 @@ def test_no_rows_only_queries():
     family emits exact rows + pinned flags instead of going rows-only.
     Keep it that way: a new rows-only query needs an explicit decision."""
     assert ROWS_ONLY == [], f"queries without oracle: {ROWS_ONLY}"
+
+
+def test_product_stats_day_window_with_time_of_day(spark, tmp_path):
+    """dws_product_stats windows l_shipdate by day like its oracle, also
+    when the shipdates carry a time of day (the scale generator's do;
+    the TPC-H-style testdata's are midnights)."""
+    import duckdb
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from tools.gen_scale_data import gen_lineitem, gen_part
+
+    rng = np.random.default_rng(3)
+    lineitem = gen_lineitem(rng, 300, 2, 2)
+    assert any(t.value % 86_400_000_000 for t in lineitem["l_shipdate"])
+    pq.write_table(lineitem, tmp_path / "lineitem.parquet")
+    pq.write_table(gen_part(rng, 2), tmp_path / "part.parquet")
+    con = duckdb.connect()
+    for t in ("lineitem", "part"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path / t}.parquet')"
+        )
+    spec = REGISTRY["dws_product_stats"]
+    got = canon(spec.fn(spark, str(tmp_path)).toPandas())
+    want = canon(con.execute(spec.oracle).df())
+    con.close()
+    assert len(got) == len(want), f"rowcount {len(got)} vs {len(want)}"
+    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)

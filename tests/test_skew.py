@@ -48,18 +48,26 @@ def skew_confs(spark):
 
 def test_aqe_splits_skewed_join(spark, skew_confs):
     # left: 40k rows, 90% on key 0, with a fat payload column so the hot
-    # partition crosses the (shrunk) byte threshold
-    left = spark.range(0, 40_000).select(
+    # partition crosses the (shrunk) byte threshold. The payload is an
+    # incompressible digest and the aggregate above the join reads it:
+    # a payload nothing reads is pruned before the shuffle, and the join
+    # then moves only `k`, whose zeros compress to almost nothing. AQE
+    # splits a skewed partition at map-output boundaries, so the left
+    # side gets a fixed 8 map tasks rather than one per core (a single
+    # map task on one core leaves nothing to split).
+    left = spark.range(0, 40_000, numPartitions=8).select(
         F.when(F.col("id") % 10 < 9, F.lit(0))
         .otherwise(F.col("id") % 1000)
         .alias("k"),
-        F.concat(F.lit("x" * 64), F.col("id").cast("string")).alias("pay"),
+        F.sha2(F.col("id").cast("string"), 256).alias("pay"),
     )
     right = spark.range(0, 1000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
     joined = left.join(right, "k").groupBy().agg(
-        F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv")
+        F.count(F.lit(1)).alias("n"),
+        F.sum("v").alias("sv"),
+        F.max("pay").alias("max_pay"),
     )
     [row] = joined.collect()  # execute so AQE finalizes the plan
     assert row.n == 40_000
